@@ -153,14 +153,14 @@ def connected_components(
 def _cc_label_prop(
     edges: DataFrame, max_iterations: int
 ) -> tuple[DataFrame, bool]:
-    """Min-label propagation; returns (labels, converged).  Convergence is
-    an exact label-sum check: per-node labels are MONOTONICALLY
-    non-increasing under min-propagation, so Σ component is strictly
-    smaller after any change and equal iff the fixpoint is reached — one
-    scalar aggregate per round instead of the old labels⋈new_labels
-    changed-row join (same action count, one join and one shuffle less
-    per round; decimal sum so huge node-id sums can't overflow under
-    ANSI mode)."""
+    """Min-label propagation; returns (labels, converged).
+
+    Convergence is an exact changed-row check that rides the round's own
+    aggregation: each node's previous label is carried through the
+    union as a ``_self`` row, so the same groupBy yields both the new
+    label and the old one (``_old``).  The fixpoint is reached iff no
+    node's label changed — one action per round, no extra join or
+    shuffle, and exact for every node-id type (integers, strings, ...)."""
     und = (
         edges.select("src", "dst")
         .unionByName(
@@ -173,30 +173,34 @@ def _cc_label_prop(
     )
     labels = graph_nodes(und).withColumn("component", F.col("node"))
     labels = labels.localCheckpoint(eager=False)
-
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
     converged = False
     for _ in range(max_iterations):
         neigh = und.join(labels, und["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), F.col("component")
+            F.col("dst").alias("node"),
+            F.col("component"),
+            F.lit(False).alias("_self"),
         )
         new_labels = (
-            labels.unionByName(neigh)
+            labels.withColumn("_self", F.lit(True))
+            .unionByName(neigh)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("_self"), F.col("component"))).alias(
+                    "_old"
+                ),
+            )
             .localCheckpoint(eager=False)
         )
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
+        converged = (
+            new_labels.filter(F.col("component") != F.col("_old"))
+            .limit(1)
+            .count()
+            == 0
+        )
+        labels = new_labels.drop("_old")
+        if converged:
             break
-        prev_sum = new_sum
     return labels, converged
 
 

@@ -86,16 +86,26 @@ import itertools as _itertools
 _RUN_SEQ = _itertools.count(1)
 
 
+# the only keys CrawlConfig.extra accepts; run_crawl rejects any other
+_EXTRA_KEYS = ("fetcher", "fetch_min_interval")
+
+
 @dataclass
 class CrawlConfig:
+    """Crawl knobs.  ``extra`` accepts only ``fetcher`` (an injected
+    request callable that switches the fetch stage from the closed-world
+    fixture join to the production grouped stage) and
+    ``fetch_min_interval`` (that stage's per-group pacing, default 1 s);
+    ``run_crawl`` raises ``ValueError`` on any other key.  The round-state
+    scratch dir is not configurable: ``run_crawl`` always sets one per
+    run, under Spark's managed local dir."""
+
     max_depth: int = 3                  # reference MAX_DEPTH default
     politeness_budget: int = 8          # per host per round (north rule)
     salt_buckets: int = 4               # host-salt skew factor
     max_attempts: int = 3               # timeout retries (T2)
     bloom_shards: int = 16
     bloom_bits_per_shard: int = 1 << 18
-    use_bloom: bool = True
-    filter_kind: str = "bloom"  # "bloom" | "cuckoo" (deletable fallback)
     max_rounds: int = 64
     # per-round seen-delta sizes up to this collect driver-side for the
     # numpy Bloom insert; above it the distributed build_bloom_shards +
@@ -210,13 +220,9 @@ def _extract_links(ok_html: DataFrame, cfg: CrawlConfig) -> DataFrame:
         F.coalesce(F.col("final_url"), F.col("url")).alias("base_url"),
         F.posexplode(links_view(F.col("spans"))).alias("link_pos", "href"),
     )
-    # ONE fused Arrow pass: urljoin + urlparse + canonicalize.  A guarded
-    # pure-Catalyst fast path for simple absolute links exists
-    # (U.resolve_and_parse_expr, equivalence-tested) but was measured
-    # 15-25 % SLOWER end-to-end in interleaved A/Bs — the Python resolve
-    # of the link stream is cheap and pipelined, while the guard/struct
-    # expressions multiply across this projection's many consumers —
-    # so the plain fused UDF stays (guide §1.1: measure, don't assume).
+    # ONE fused Arrow pass: urljoin + urlparse + canonicalize (a guarded
+    # pure-Catalyst path for absolute links measured 15-25 % slower end to
+    # end in interleaved A/Bs, OPTIMIZATION_r06.md)
     resolved = links.withColumn(
         "_rp", U.resolve_and_parse_udf(F.col("base_url"), F.col("href"))
     )
@@ -248,11 +254,13 @@ def run_round(
     web_pages: DataFrame,
     robots_src: DataFrame,
     cfg: CrawlConfig,
-    bloom: dict[int, bytes] | None = None,
-    scratch: str | None = None,
+    bloom: dict[int, bytes],
+    scratch: str,
     pending_hint: int | None = None,
 ) -> dict[str, DataFrame]:
     """Execute one crawl round; returns the post-round tables (lazy DFs).
+
+    ``bloom``: the Bloom shard map of round-start ``seen``.
 
     ``pending_hint``: exact count of retryable frontier rows entering this
     round, when the caller knows it (run_crawl derives it from last
@@ -262,28 +270,23 @@ def run_round(
     ``robots_src(host, rules_txt)`` is the closed-world robots fixture —
     hosts absent from it are "fetch failed ⇒ permissive" (null rules).
 
-    ``scratch``: directory for the round's fetch-result materialization as
-    PARQUET instead of a row-serialized localCheckpoint.  The fetch result
-    is ~95% html+spans by bytes but most consumers (six status branches,
-    metrics) need only the narrow frontier columns — columnar storage
-    gives them column pruning, so only the documents/link branches pay for
-    the heavy payload.  On a cluster this is exactly an Iceberg/Delta
-    round-state table on local SSD/object storage.
+    ``scratch`` (always set; run_crawl passes a per-run dir): directory
+    for the round's fetch-result materialization as PARQUET.  The fetch
+    result is ~95% html+spans by bytes but most consumers (six status
+    branches, metrics) need only the narrow frontier columns — columnar
+    storage gives them column pruning, so only the documents/link branches
+    pay for the heavy payload.  On a cluster this is exactly an
+    Iceberg/Delta round-state table on local SSD/object storage.
+
+    ``cfg.extra`` is read for ``fetcher`` and ``fetch_min_interval`` only.
     """
-    # opt-in phase profiling: cfg.extra["phase_log"] is a caller-owned list
-    # that collects (round_no, phase, seconds) for the serial-fraction
-    # audit (tools/profile_serial.py); absent in normal runs = zero cost
-    import time as _time
-
-    _phase_log = cfg.extra.get("phase_log")
-    _t_round0 = _time.perf_counter()
-
-    def _phase(name: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if _phase_log is not None:
-            _phase_log.append((round_no, name, now - t0))
-        return now
-
+    fetcher = cfg.extra.get("fetcher")
+    # when the driver already knows the TOTAL pending count (from last
+    # round's collected metrics) and it is ≤ the per-host budget, no host
+    # can exceed its budget: the round is provably small
+    small_round = (
+        pending_hint is not None and pending_hint <= cfg.politeness_budget
+    )
     retryable = (F.col("status") == "pending") | (
         (F.col("status") == "timeout") & (F.col("attempts") < cfg.max_attempts)
     )
@@ -294,14 +297,12 @@ def run_round(
     # persisted: deferred, first_timers, retries, and skipped_seen all
     # branch off this subtree — without the persist the window shuffles
     # (and everything upstream) re-execute once per consumer.
-    # Short-circuit: when the driver already knows the TOTAL pending count
-    # (from last round's collected metrics) and it is ≤ the per-host
-    # budget, no host can exceed its budget, so selection is the identity —
-    # the two window shuffles (and their stage-scheduling latency, the
-    # dominant cost of small retry-only rounds) are skipped.  Selection
-    # semantics are unchanged: all rows selected, deferred empty, exactly
-    # what the windowed form returns for any under-budget round.
-    if pending_hint is not None and pending_hint <= cfg.politeness_budget:
+    # Short-circuit: on a small round selection is the identity — the two
+    # window shuffles (and their stage-scheduling latency, the dominant
+    # cost of small retry-only rounds) are skipped.  Selection semantics
+    # are unchanged: all rows selected, deferred empty, exactly what the
+    # windowed form returns for any under-budget round.
+    if small_round:
         windowed = pending.withColumn("selected", F.lit(True))
     else:
         windowed = politeness.select_polite_batch(
@@ -356,7 +357,6 @@ def run_round(
     batch_adds = new_batch.select(
         "url_hash", F.col("canonical_url").alias("url")
     ).join(seen.select("url_hash"), "url_hash", "left_anti")
-    seen_after_batch = seen.unionByName(batch_adds)
 
     # -- robots: fetch-once-per-new-host, then broadcast-join gate ----------
     to_fetch = new_batch.unionByName(retries)
@@ -373,20 +373,19 @@ def run_round(
 
     # -- fetch (closed world) + parse, materialized ONCE --------------------
     # fetched rows fan out to documents, link extraction, metrics and four
-    # frontier-status branches.  ONE eager DISK_ONLY checkpoint holds the
-    # round's fetch results + parsed spans: the fetch join runs once, the
-    # parse UDF runs once, and the heavy (html, spans) columns serialize
-    # once, off-heap.  (A deserialized in-memory persist of span-struct
-    # arrays bloats ~10× and gets evicted under load — the re-parse that
-    # follows was measured at >600 core-s per round at bench scale.)
+    # frontier-status branches.  ONE eager parquet write holds the round's
+    # fetch results + parsed spans: the fetch join runs once, the parse
+    # UDF runs once, and the heavy spans column serializes once, off-heap.
+    # (A deserialized in-memory persist of span-struct arrays bloats ~10×
+    # and gets evicted under load — the re-parse that follows was
+    # measured at >600 core-s per round at bench scale.)
     # Non-HTML/error rows carry html=null ⇒ parse yields null spans.
-    from pyspark.storagelevel import StorageLevel
-
+    #
     # fetch route: the closed-world fixture join (tests/bench — no Python
     # in the path) or, when cfg.extra["fetcher"] injects a request
     # callable, the REAL production stage — grouped applyInPandas per
     # (host, salt) with within-task pacing (sources/fetch.py)
-    if cfg.extra.get("fetcher") is not None:
+    if fetcher is not None:
         from ..sources.fetch import fetch_over_network
 
         salted = allowed.withColumn(
@@ -396,8 +395,7 @@ def run_round(
         raw_fetched = fetch_over_network(
             salted,
             min_interval_s=cfg.extra.get("fetch_min_interval", 1.0),
-            fetcher=cfg.extra["fetcher"],
-            pacer=cfg.extra.get("fetch_pacer"),
+            fetcher=fetcher,
         ).drop("host_salt")
     else:
         raw_fetched = fetch_synthetic(allowed, web_pages)
@@ -409,18 +407,14 @@ def run_round(
     #   (guide §1.2: don't compute what you throw away — at max_depth=1
     #   that is HALF the fetched pages), so their spans are derived
     #   lazily by the documents sink below, only if a caller
-    #   materializes documents.  Opt out: extra["lazy_parse"]=False.
+    #   materializes documents.
     _eff_limit = F.coalesce(F.col("depth_limit"), F.lit(cfg.max_depth))
-    if cfg.extra.get("lazy_parse", True):
-        _parse_mask = (F.col("fetch_outcome") == "ok_html") & (
-            F.col("depth") < _eff_limit
-        )
-    else:
-        _parse_mask = F.col("fetch_outcome") == "ok_html"
+    _parse_mask = (F.col("fetch_outcome") == "ok_html") & (
+        F.col("depth") < _eff_limit
+    )
     fetched_lazy = classify_fetch(raw_fetched).withColumn(
         "spans", parse_html_udf(F.when(_parse_mask, F.col("html")))
     )
-    _t = _phase("plan_build_prefetch", _t_round0)
     # NARROW round state (VERDICT r5 #2 / guide §8: "make every shuffle
     # but the last operate on a lightweight proxy"): with the closed-world
     # synthetic fetcher the raw ``html`` bodies are deterministically
@@ -429,25 +423,15 @@ def run_round(
     # column entirely; ``documents`` re-attaches html with one lazy join
     # that only executes if a caller materializes the documents sink.
     # With an injected production fetcher bodies are NOT refetchable and
-    # stay inline.  Opt out with extra["narrow_round_state"]=False.
-    drop_html = (
-        scratch is not None
-        and cfg.extra.get("fetcher") is None
-        and cfg.extra.get("narrow_round_state", True)
-    )
-    if scratch is not None:
-        # columnar round state: the six status branches + metrics prune to
-        # the narrow frontier columns; only documents/link extraction read
-        # the heavy spans column chunks
-        path = f"{scratch}/fetched_r{round_no:05d}"
-        state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
-        state_out.write.mode("overwrite").parquet(path)
-        fetched = spark.read.parquet(path)
-    else:
-        fetched = fetched_lazy.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-    _t = _phase("fetch_materialize", _t)
+    # stay inline.
+    drop_html = fetcher is None
+    # columnar round state: the six status branches + metrics prune to the
+    # narrow frontier columns; only documents/link extraction read the
+    # heavy spans column chunks
+    path = f"{scratch}/fetched_r{round_no:05d}"
+    state_out = fetched_lazy.drop("html") if drop_html else fetched_lazy
+    state_out.write.mode("overwrite").parquet(path)
+    fetched = spark.read.parquet(path)
     ok_html = fetched.filter(F.col("fetch_outcome") == "ok_html")
 
     # -- documents: one row per fetched HTML page ---------------------------
@@ -502,15 +486,12 @@ def run_round(
     # are NARROW (urls + lineage keys, no html/spans), so caching them is
     # cheap relative to one extra decompress+explode+UDF pass.
     candidates = candidates.persist()
-    if cfg.use_bloom and bloom is not None:
-        # the shard map was built from round-start `seen`, so run the Bloom
-        # fast path against that set, then an exact anti-join against this
-        # round's (small) batch additions which the shards don't cover yet
-        fresh = seen_ops.filter_new(
-            candidates, seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
-        ).join(new_batch.select("url_hash"), "url_hash", "left_anti")
-    else:
-        fresh = seen_ops.filter_new(candidates, seen_after_batch)
+    # the shard map was built from round-start `seen`, so run the Bloom
+    # fast path against that set, then an exact anti-join against this
+    # round's (small) batch additions which the shards don't cover yet
+    fresh = seen_ops.filter_new(
+        candidates, seen, bloom, cfg.bloom_shards, cfg.bloom_bits_per_shard
+    ).join(new_batch.select("url_hash"), "url_hash", "left_anti")
     dedup_w = Window.partitionBy("url_hash").orderBy(
         "child_depth", "parent_canonical", "link_pos"
     )
@@ -529,27 +510,14 @@ def run_round(
     # Cache-chain warm-up: one linear count that populates the
     # windowed→new_batch→fresh persisted subtrees in dependency order
     # before the multi-branch round materialization, so concurrent AQE
-    # leaf stages read the cache instead of racing to recompute it.
-    # Historically keyed on parallelism ≥ 16 (before `fresh` was
-    # persisted the count was thrown away and only paid off when the
-    # local[32] stage race bit).  With `fresh` persisted the warm-up
-    # wins at every level (20k-page A/B, fresh JVMs: local[2] 102 s vs
-    # 115 s, local[8] 60 s vs 79 s — and the unpersisted r4 baseline was
-    # 170/90 s).  Overridable via extra["warmup"].
-    warmup = cfg.extra.get("warmup")
-    if warmup is None:
-        # skip the warm-up JOB (but keep the persist) on provably-small
-        # retry rounds: when the batch fits under the per-host budget the
-        # chain a racing consumer would recompute is tiny, and the saved
-        # job submission (~2-3 s) is pure serial-fraction reduction
-        warmup = not (
-            pending_hint is not None
-            and pending_hint <= cfg.politeness_budget
-        )
-    if warmup:
-        _t = _phase("plan_build_mid", _t)
+    # leaf stages read the cache instead of racing to recompute it.  It
+    # wins at every parallelism (20k-page A/B, fresh JVMs: local[2] 102 s
+    # vs 115 s, local[8] 60 s vs 79 s).  Small rounds skip the warm-up
+    # JOB (but keep the persist): the chain a racing consumer would
+    # recompute is tiny, and the saved job submission (~2-3 s) is pure
+    # serial-fraction reduction.
+    if not small_round:
         fresh.count()
-        _t = _phase("warmup_count", _t)
     new_frontier = fresh.select(
         F.col("canonical_url").alias("url"),  # children enqueue normalized
         F.col("canonical_url"),
@@ -691,7 +659,6 @@ def run_round(
 
     # Bloom maintenance keys come from seen_delta (exactly the keys by
     # which `seen` grows — the shard map tracks `seen` bit-for-bit)
-    _phase("plan_build_postfetch", _t)
     return {
         "frontier": frontier_after,
         "seen": seen_final,
@@ -709,7 +676,6 @@ def _update_bloom(
     delta_df: DataFrame,
     n_delta: int,
     cfg: CrawlConfig,
-    seen_full: DataFrame | None = None,
 ) -> dict[int, bytes]:
     """Insert a round's seen-delta keys into the shard map.
 
@@ -720,36 +686,9 @@ def _update_bloom(
     at 10^10-URL scale adds billions of keys, which must never transit the
     driver.  Both paths are bit-identical (asserted by
     tests/test_seen.py::test_bloom_delta_paths_identical).
-
-    Cuckoo shards can't be bitwise-ORed, so big cuckoo deltas instead
-    rebuild the shard map distributedly from ``seen_full`` (the complete
-    post-round seen set) — bounded driver contact either way.
     """
     import numpy as _np
 
-    if cfg.filter_kind == "cuckoo":
-        from ..operators import cuckoo as ckf
-
-        if n_delta > cfg.bloom_delta_collect_max:
-            # never collect an oversized delta driver-side: rebuild the
-            # cuckoo shards executor-side from the full seen set and
-            # collect only the MB-sized blobs
-            assert seen_full is not None, "big cuckoo delta needs seen_full"
-            shards_df = ckf.build_cuckoo_shards(
-                seen_full, cfg.bloom_shards,
-                max(cfg.bloom_bits_per_shard // 64, 1024),
-            )
-            return seen_ops.shards_to_dict(shards_df)
-        keys = _np.array(
-            [r[0] for r in delta_df.select("url_hash").collect()], dtype=_np.int64
-        )
-        by_shard = {
-            int(s): keys[_np.mod(keys, cfg.bloom_shards) == s]
-            for s in _np.unique(_np.mod(keys, cfg.bloom_shards))
-        }
-        return ckf.merge_shards(
-            bloom, by_shard, max(cfg.bloom_bits_per_shard // 64, 1024)
-        )
     if n_delta <= cfg.bloom_delta_collect_max:
         keys = _np.array(
             [r[0] for r in delta_df.select("url_hash").collect()], dtype=_np.int64
@@ -779,41 +718,18 @@ def run_crawl(
     each round commits atomically; ``resume=True`` continues from the last
     committed round (bit-identical to an uninterrupted run — verified by
     tests/test_resume.py).
+
+    ``cfg.extra`` may hold only ``fetcher`` and ``fetch_min_interval``;
+    any other key raises ``ValueError`` before a Spark job runs, so a
+    stale toggle can never be silently ignored.  Every round materializes
+    its fetch results under a per-run scratch dir (always set).
     """
-    # crawl-scoped session conf (cfg.extra["conf"]): applied for the round
-    # loop and RESTORED afterwards, so callers can tune runtime knobs (AQE,
-    # partition advisories) for the crawl without leaking them into the
-    # rest of the session's queries
-    _conf_overrides = cfg.extra.get("conf") or {}
-    _conf_saved: dict[str, str | None] = {}
-    for _k, _v in _conf_overrides.items():
-        try:
-            _conf_saved[_k] = spark.conf.get(_k)
-        except Exception:
-            _conf_saved[_k] = None
-        spark.conf.set(_k, _v)
-
-    try:
-        return _run_crawl_inner(
-            spark, seed_jobs, web_pages, robots_src, cfg, store, resume
+    unknown = sorted(set(cfg.extra) - set(_EXTRA_KEYS))
+    if unknown:
+        raise ValueError(
+            f"unknown CrawlConfig.extra keys {unknown}; "
+            f"extra accepts only {list(_EXTRA_KEYS)}"
         )
-    finally:
-        for _k, _old in _conf_saved.items():
-            if _old is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _old)
-
-
-def _run_crawl_inner(
-    spark: SparkSession,
-    seed_jobs: DataFrame,
-    web_pages: DataFrame,
-    robots_src: DataFrame,
-    cfg: CrawlConfig,
-    store: SnapshotStore | None = None,
-    resume: bool = False,
-) -> dict[str, DataFrame]:
     if resume:
         assert store is not None and store.current_round() >= 0
         start_round = store.current_round() + 1
@@ -856,9 +772,7 @@ def _run_crawl_inner(
     # url_hash bucketing also gives next round's anti-joins a stable
     # co-partitioning.  (At 10^10 scale the same normalization is the
     # Iceberg state-table write: bucket(url_hash) partitioning.)
-    n_buckets = int(
-        cfg.extra.get("n_buckets", spark.sparkContext.defaultParallelism)
-    )
+    n_buckets = spark.sparkContext.defaultParallelism
 
     # per-run scratch dir for columnar round-state materializations — a
     # subdir of Spark's OWN managed local dir (local SSD / tmpfs), so the
@@ -877,20 +791,9 @@ def _run_crawl_inner(
     # per-INVOCATION suffix: two run_crawl calls in one session must not
     # collide — the second would overwrite fetched_r* parquet the first
     # run's returned (lazy) DataFrames still reference
-    scratch = cfg.extra.get(
-        "scratch",
-        f"{_managed}/crawl-{spark.sparkContext.applicationId}-{next(_RUN_SEQ)}",
+    scratch = (
+        f"{_managed}/crawl-{spark.sparkContext.applicationId}-{next(_RUN_SEQ)}"
     )
-
-    # Optional: pre-hash-partition web_pages on the join key so each
-    # round's sort-merge fetch join reuses the partitioning instead of
-    # re-exchanging the heaviest table.  Off by default: the one-time
-    # shuffle + second cached copy only amortizes on LONG crawls (many
-    # rounds); interleaved A/B at 3 rounds showed no win.  At production
-    # scale the equivalent is a bucketed/Iceberg fetch-cache table, which
-    # pays the layout cost once at ingest, not per crawl.
-    if cfg.extra.get("web_prepart", False):
-        web_pages = web_pages.repartition(n_buckets, "url").persist()
 
     for round_no in range(start_round, cfg.max_rounds):
         if pending_known_empty:
@@ -902,33 +805,24 @@ def _run_crawl_inner(
         if driver_mode and round_no == start_round:
             # one initial job only; thereafter the metric counts decide.
             # A FULL count (the frontier is a localCheckpoint — counting
-            # it is metadata-cheap) instead of the old limit(1) emptiness
-            # probe: the exact figure seeds pending_hint, so an
-            # under-budget round 0 skips its provably-identity politeness
-            # windows exactly like the metric-hinted later rounds do.
-            n_start = frontier.filter(retryable).count()
-            if n_start == 0:
+            # it is metadata-cheap): the exact figure seeds pending_hint,
+            # so an under-budget round 0 skips its provably-identity
+            # politeness windows exactly like the metric-hinted later
+            # rounds do.
+            pending_hint = frontier.filter(retryable).count()
+            if pending_hint == 0:
                 break
-            if cfg.extra.get("round0_hint", True):
-                pending_hint = n_start
-        if cfg.use_bloom and bloom is None:
+        if bloom is None:
             # full build only on entry (empty at fresh start; one pass on
             # resume) — thereafter updated incrementally from round deltas
-            if cfg.filter_kind == "cuckoo":
-                from ..operators import cuckoo as ckf
-
-                shards_df = ckf.build_cuckoo_shards(
-                    seen, cfg.bloom_shards, max(cfg.bloom_bits_per_shard // 64, 1024)
-                )
-            else:
-                shards_df = seen_ops.build_bloom_shards(
+            bloom = seen_ops.shards_to_dict(
+                seen_ops.build_bloom_shards(
                     seen, cfg.bloom_shards, cfg.bloom_bits_per_shard
                 )
-            bloom = seen_ops.shards_to_dict(shards_df)
+            )
         out = run_round(
             spark, round_no, frontier, seen, robots_rules,
-            web_pages, robots_src, cfg, bloom,
-            scratch=scratch if cfg.extra.get("fetched_parquet", True) else None,
+            web_pages, robots_src, cfg, bloom, scratch,
             pending_hint=pending_hint,
         )
         pending_hint = None  # recomputed from this round's metrics below
@@ -956,6 +850,10 @@ def _run_crawl_inner(
             frontier = store.read("frontier")
             seen = store.read("seen")
             robots_rules = store.read("robots")
+            # delta size unknown until counted — count() on the committed
+            # delta is a metadata-cheap job
+            delta_df = out["seen_delta"]
+            bloom = _update_bloom(bloom, delta_df, delta_df.count(), cfg)
         else:
             # no store: materialize via localCheckpoint to cut lineage
             # growth.  DISK_ONLY keeps round history (esp. documents with
@@ -975,17 +873,6 @@ def _run_crawl_inner(
             # instead of 5.
             from pyspark.storagelevel import StorageLevel
 
-            import time as _time
-
-            _phase_log = cfg.extra.get("phase_log")
-            _pt = _time.perf_counter()
-
-            def _phase(name: str, t0: float) -> float:
-                now = _time.perf_counter()
-                if _phase_log is not None:
-                    _phase_log.append((round_no, name, now - t0))
-                return now
-
             _ck = {"eager": True, "storageLevel": StorageLevel.DISK_ONLY}
             tagged = (
                 out["frontier"]
@@ -1003,11 +890,9 @@ def _run_crawl_inner(
                     allowMissingColumns=True,
                 )
             )
-            _pt = _phase("state_plan_build", _pt)
             state_ck = tagged.repartition(n_buckets, "url_hash").localCheckpoint(
                 **_ck
             )
-            _pt = _phase("state_checkpoint", _pt)
             frontier = state_ck.filter(F.col("_tbl") == "frontier").select(
                 [f.name for f in FRONTIER_SCHEMA.fields]
             )
@@ -1028,31 +913,22 @@ def _run_crawl_inner(
             #   a breadth-explosion round can never pull an oversized
             #   delta through the driver; hitting the bound falls back to
             #   the distributed shard build below.
-            base = state_ck.filter(
-                F.col("_tbl").isin(["metrics", "robots"])
-            ).select(
-                "_tbl", "node_type", "event", "task_id", "url", "count",
-                "partition_id", "round", "host", "rules_txt",
-                F.lit(None).cast("string").alias("url_hash_str"),
+            keys_slice = (
+                state_ck.filter(F.col("_tbl") == "seen")
+                .select(F.col("url_hash").cast("string").alias("url_hash_str"))
+                .limit(cfg.bloom_delta_collect_max + 1)
+                .withColumn("_tbl", F.lit("seen"))
             )
-            collect_keys = (
-                cfg.use_bloom
-                and bloom is not None
-                and cfg.filter_kind != "cuckoo"
-            )
-            if collect_keys:
-                keys_slice = (
-                    state_ck.filter(F.col("_tbl") == "seen")
-                    .select(
-                        F.col("url_hash").cast("string").alias("url_hash_str")
-                    )
-                    .limit(cfg.bloom_delta_collect_max + 1)
-                    .withColumn("_tbl", F.lit("seen"))
+            small_pdf = (
+                state_ck.filter(F.col("_tbl").isin(["metrics", "robots"]))
+                .select(
+                    "_tbl", "node_type", "event", "task_id", "url", "count",
+                    "partition_id", "round", "host", "rules_txt",
+                    F.lit(None).cast("string").alias("url_hash_str"),
                 )
-                base = base.unionByName(keys_slice, allowMissingColumns=True)
-            _pt = _phase("collect_plan_build", _pt)
-            small_pdf = base.toPandas()
-            _pt = _phase("collect_small", _pt)
+                .unionByName(keys_slice, allowMissingColumns=True)
+                .toPandas()
+            )
             m = small_pdf[small_pdf["_tbl"] == "metrics"]
             round_rows = [
                 (nt, ev, tid, url, int(cnt), int(pid), int(rnd))
@@ -1119,45 +995,22 @@ def _run_crawl_inner(
                 for (_, event, _, _, count, _, _) in round_rows
                 if event in _RETRYABLE_EVENTS
             )
-            if cfg.use_bloom and bloom is not None:
-                if collect_keys:
-                    key_strs = small_pdf.loc[
-                        small_pdf["_tbl"] == "seen", "url_hash_str"
-                    ]
-                    if len(key_strs) <= cfg.bloom_delta_collect_max:
-                        # full delta came back (under the bound): exact
-                        # int64 keys via C-speed decimal-string parse
-                        import numpy as _np
+            key_strs = small_pdf.loc[small_pdf["_tbl"] == "seen", "url_hash_str"]
+            if len(key_strs) <= cfg.bloom_delta_collect_max:
+                # full delta came back (under the bound): exact int64 keys
+                # via C-speed decimal-string parse
+                import numpy as _np
 
-                        seen_key_rows = key_strs.to_numpy().astype(_np.int64)
-                        bloom = seen_ops.bloom_insert_driver(
-                            bloom, seen_key_rows,
-                            cfg.bloom_shards, cfg.bloom_bits_per_shard,
-                        )
-                    else:
-                        # bound hit ⇒ delta too big to transit the driver:
-                        # distributed shard build + OR-merge
-                        bloom = _update_bloom(
-                            bloom, seen_delta_ck,
-                            cfg.bloom_delta_collect_max + 1, cfg,
-                            seen_full=seen,
-                        )
-                else:
-                    n_delta = sum(
-                        count
-                        for (_, event, _, _, count, _, _) in round_rows
-                        if event in ("new_urls_found", "urls_scheduled")
-                    )
-                    bloom = _update_bloom(
-                        bloom, seen_delta_ck, n_delta, cfg, seen_full=seen
-                    )
-            _phase("driver_bookkeeping", _pt)
-        if store is not None and cfg.use_bloom and bloom is not None:
-            # store path: delta size unknown until counted — count() on the
-            # committed delta is a metadata-cheap job
-            delta_df = out["seen_delta"]
-            n_delta = delta_df.count()
-            bloom = _update_bloom(bloom, delta_df, n_delta, cfg, seen_full=seen)
+                bloom = seen_ops.bloom_insert_driver(
+                    bloom, key_strs.to_numpy().astype(_np.int64),
+                    cfg.bloom_shards, cfg.bloom_bits_per_shard,
+                )
+            else:
+                # bound hit ⇒ delta too big to transit the driver:
+                # distributed shard build + OR-merge
+                bloom = _update_bloom(
+                    bloom, seen_delta_ck, cfg.bloom_delta_collect_max + 1, cfg
+                )
         for df in out.get("_persisted", []):
             df.unpersist()
 

@@ -107,7 +107,6 @@ def fetch_over_network(
     url_col: str = "url",
     min_interval_s: float = 1.0,
     fetcher=None,
-    pacer=None,
 ) -> DataFrame:
     """Production fetch stage: grouped applyInPandas per (host, salt) so
     requests to one host serialize inside a task.
@@ -134,8 +133,7 @@ def fetch_over_network(
     executor-side — no outbound network exists in this sandbox; tests
     drive the REAL grouped stage with a fake fetcher backed by the web
     fixture (tests/test_crawl_parity.py) and bench uses the join-based
-    ``fetch_synthetic``.  ``pacer`` optionally supplies per-group
-    ``(sleep, clock)`` for deterministic pacing tests.
+    ``fetch_synthetic``.
     """
     out_schema = (
         batch.schema.simpleString()[7:-1]
@@ -145,14 +143,12 @@ def fetch_over_network(
     in_cols = list(batch.columns)
 
     def fetch_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sleep, clock = pacer() if pacer is not None else (None, None)
         out_rows = []
         # pacing wraps the REQUEST call itself (each row is yielded ≥
         # min_interval_s after the previous row's release) — pacing batch
         # assembly and then firing requests back-to-back would defeat the
         # per-host budget
-        for row in iter_paced_rows(pdf, min_interval_s, sleep=sleep,
-                                   clock=clock):
+        for row in iter_paced_rows(pdf, min_interval_s):
             if fetcher is None:
                 raise NotImplementedError(
                     "network fetch is not available in this sandbox; "

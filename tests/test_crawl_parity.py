@@ -196,3 +196,30 @@ def test_validate_seed_jobs(spark):
     assert reasons["  "] == "missing_task_id"
     assert reasons["empty"] == "empty_seed_set"
     assert reasons["neg"] == "invalid_depth"
+
+
+def test_stale_extra_toggle_fails_before_any_job(spark, web_fixture):
+    """A leftover toggle in ``CrawlConfig.extra`` raises, naming the key,
+    before run_crawl launches a single Spark job — it is never silently
+    ignored."""
+    cfg = CrawlConfig(**{**CFG.__dict__, "extra": {"lazy_parse": False}})
+    sc = spark.sparkContext
+    group = "stale-extra-toggle"
+    sc.setJobGroup(group, "stale extra toggle")
+    try:
+        with pytest.raises(ValueError, match="lazy_parse"):
+            run_crawl(
+                spark,
+                web_fixture["seed_jobs"],
+                web_fixture["web_pages"],
+                web_fixture["robots_src"],
+                cfg,
+            )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # control: a job launched here IS attributed to the group
+        spark.range(1).count()
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

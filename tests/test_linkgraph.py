@@ -78,6 +78,27 @@ def test_connected_components_long_path_converges(spark):
     assert labels == {i: 0 for i in range(10)}
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_connected_components_string_node_ids(spark, ansi):
+    """String node ids must propagate to the fixpoint under either ANSI
+    setting (a label sum over them fails to cast with ANSI on, and is
+    NULL with it off — which used to stop propagation after one round)."""
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        labels = {
+            r["node"]: r["component"]
+            for r in LG.connected_components(
+                spark.createDataFrame(pairs, "src string, dst string"),
+                algorithm="label",
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert labels == {**{n: "a" for n in "abcde"}, "x": "x", "y": "x"}
+
+
 def test_triangle_count(spark):
     # K4 has 4 triangles; extra pendant edge adds none; duplicate and
     # reversed edges must not double-count

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_web_crawling_and_indexing_system_gcp_spark.functions import urls as U
-from tests.oracle import normalize
+from tests.oracle import clean, normalize
 
 TRICKY = [
     "http://Example.COM/Path/To/Page",
@@ -112,11 +112,11 @@ def test_is_valid_http(spark, url, valid):
     assert df.filter(U.is_valid_http(F.col("url"))).count() == (1 if valid else 0)
 
 
-def test_resolve_expr_matches_udf(spark):
-    """resolve_and_parse_expr's Catalyst fast path must agree with the
-    exact urllib UDF on every field for an adversarial href corpus —
-    any divergent case must be routed to the UDF by the guard, never
-    answered differently."""
+def test_resolve_and_parse_udf_matches_oracle(spark):
+    """The crawl's fused link UDF must agree, field by field, with the
+    reference chain urljoin(base, clean(href)) → urlparse → normalize over
+    an adversarial href corpus (absolute/relative/protocol-relative links,
+    empty netlocs, params, tabs, trailing '?'/'#', userinfo, non-ASCII)."""
     bases = [
         "http://h0.test/p/0",
         "https://h3.test/a/b/",
@@ -156,7 +156,7 @@ def test_resolve_expr_matches_udf(spark):
         "ftp://files.test/x",
         "",
         "http://c.test/éclair",
-        "http://c.test/end ",
+        "http://c.test/end\u00a0",
         "http://c.test/p%20q",
         "http://c.test/p#",
         "http://c.test/p##two",
@@ -167,15 +167,15 @@ def test_resolve_expr_matches_udf(spark):
     df = spark.createDataFrame(rows, "base_url string, href string")
     got = df.select(
         "base_url", "href",
-        U.resolve_and_parse_expr(F.col("base_url"), F.col("href")).alias("e"),
         U.resolve_and_parse_udf(F.col("base_url"), F.col("href")).alias("u"),
     ).collect()
     assert len(got) == len(rows)
     for r in got:
-        for field in ("scheme", "netloc", "canonical"):
-            assert (r["e"][field] == r["u"][field]) or (
-                r["e"][field] is None and r["u"][field] is None
-            ), (r["base_url"], r["href"], field, r["e"], r["u"])
-        # new_url must match whenever the fast path answered (non-null e)
-        if r["e"]["new_url"] is not None and r["u"]["new_url"] is not None:
-            assert r["e"]["new_url"] == r["u"]["new_url"], (r["href"], r["e"], r["u"])
+        base, href, u = r["base_url"], r["href"], r["u"]
+        if href is None:
+            assert tuple(u) == (None, None, None, None), u
+            continue
+        new_url = urljoin(base, clean(href))
+        p = urlparse(new_url)
+        want = (new_url, p.scheme, p.netloc, normalize(new_url))
+        assert tuple(u) == want, (base, href, u, want)
